@@ -399,6 +399,16 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _round_double(c, d: int):
+    """``round(c, d)`` of the IEEE double ``c * 10**d``, as DuckDB and
+    C's ``round()`` compute it.  Spark's ``round`` goes through the
+    shortest decimal string of the double instead, so an exact decimal
+    half that the double sits just below (199/40 = 4.975, stored as
+    4.97499999...) rounds up in Spark but down in DuckDB."""
+    scale = 10 ** d
+    return F.round(c * scale) / scale
+
+
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length, punctuation ratio, digit ratio, mean
     word length — the boilerplate/garbage heuristics of a training-data
@@ -411,9 +421,9 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntok = F.size(toks)
     return d.select(
         "doc_id",
-        F.round(punct / n, 4).alias("punct_ratio"),
-        F.round(digits / n, 4).alias("digit_ratio"),
-        F.round(n / ntok, 2).alias("mean_word_len"),
+        _round_double(punct / n, 4).alias("punct_ratio"),
+        _round_double(digits / n, 4).alias("digit_ratio"),
+        _round_double(n / ntok, 2).alias("mean_word_len"),
         ((n >= 20) & (punct / n < 0.2)).alias("passes_quality"),
     )
 

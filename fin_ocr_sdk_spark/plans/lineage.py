@@ -1,7 +1,8 @@
 """Resumable extraction with per-partition lineage (north rule).
 
-Unit of work = one media part file (the same unit the scan stage
-parallelizes over).  Each completed unit appends a lineage row
+Unit of work = one media part file.  Pending files are spread over
+``min(n_pending, 2 * defaultParallelism)`` scan tasks; each completed
+unit yields a lineage row
 
     (partition_id, media_file, doc_count, span_count, checksum,
      run_id, wall_ms)
@@ -13,7 +14,14 @@ reader never picks up — re-running skips every committed partition via
 an anti-join on the lineage table and scans only the remainder.  (On a
 real deployment both tables are Iceberg and the span+lineage append is
 one atomic snapshot commit; the parquet stand-in keeps the same
-protocol with lineage-last ordering.)
+protocol with lineage-last ordering.)  All lineage rows of one run are
+committed by a single write task, so each run appends exactly one
+lineage file.
+
+Every Spark job the run starts carries a phase label
+(``lineage <run_id>: manifest and resume diff | scan | committed
+totals``) as its job description, so a run's jobs can be told apart
+in the UI, the monitoring API and the status tracker.
 
 The reference has no notion of this — it is request-scoped
 (src/context.ts) — but the slow/hung-request accounting it does keep
@@ -27,6 +35,7 @@ import os
 import time
 import uuid
 from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 import pandas as pd
@@ -61,10 +70,11 @@ def _partition_id(media_file: str) -> str:
 
 def make_lineage_kernel(out_dir: str, run_id: str, templates=None,
                         spark: SparkSession | None = None):
-    """mapInPandas kernel over (path): scan one media file, write its
-    emitted spans to <out>/spans/<partition_id>.parquet, return the
-    lineage row.  The span write happens BEFORE the lineage row is
-    returned (lineage-last commit protocol)."""
+    """mapInPandas kernel over (path): for each media file in the task's
+    batches, scan it, write its emitted spans to
+    <out>/spans/<partition_id>.parquet and yield its lineage row.  The
+    span write happens BEFORE the lineage row is returned (lineage-last
+    commit protocol)."""
     if templates is None:
         from .scan import get_default_templates
         templates = get_default_templates()
@@ -164,6 +174,24 @@ def committed_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
+@contextmanager
+def _job_phases(spark: SparkSession, run_id: str):
+    """Yields ``label(phase)``, which sets the job description of every
+    Spark job started after it to ``lineage <run_id>: <phase>``.  The
+    caller's description (or its absence) is restored on exit, also on
+    exceptions; job groups are left alone."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+
+    def label(phase: str) -> None:
+        sc.setJobDescription(f"lineage {run_id}: {phase}")
+
+    try:
+        yield label
+    finally:
+        sc.setJobDescription(prev)
+
+
 def run_resumable_extract(spark: SparkSession, documents: DataFrame,
                           media: DataFrame, out_dir: str,
                           run_id: str | None = None) -> ExtractRunResult:
@@ -172,36 +200,47 @@ def run_resumable_extract(spark: SparkSession, documents: DataFrame,
     from .pipeline import media_manifest
     run_id = run_id or uuid.uuid4().hex[:12]
     os.makedirs(out_dir, exist_ok=True)
-    # file manifest AND committed-work diff both stay distributed: the
-    # manifest is the _metadata-derived listing (pipeline.media_manifest
-    # — executors stat, driver never holds the file list), and the diff
-    # is an ANTI-JOIN against the lineage table, never a python set —
-    # at 10^12-doc scale both sides have millions of rows.  On Iceberg
-    # the manifest is the snapshot's file list read as a table.
-    manifest = media_manifest(media)
-    if manifest is None:
-        raise ValueError("resumable extract requires file-backed media")
-    n_files = manifest.count()
-    files_df = manifest.select("path")
-    lineage = committed_lineage(spark, out_dir)
-    if lineage is not None:
-        files_df = files_df.join(
-            lineage.select(F.col("media_file").alias("path")).distinct(),
-            "path", "anti")
-    n_pending = files_df.count()
-    if n_pending:
-        nparts = max(1, min(n_pending,
-                            spark.sparkContext.defaultParallelism * 2))
-        kernel = make_lineage_kernel(out_dir, run_id, spark=spark)
-        new_lineage = (files_df.repartition(nparts)
-                       .mapInPandas(kernel, LINEAGE_SCHEMA))
-        # lineage-last: the append below only happens after every span
-        # file in this run has been atomically renamed into place
-        (new_lineage.coalesce(1).write.mode("append")
-         .parquet(os.path.join(out_dir, "lineage")))
-    lineage = committed_lineage(spark, out_dir)
-    assert lineage is not None
-    agg = lineage.agg(F.sum("doc_count"), F.sum("span_count")).first()
+    with _job_phases(spark, run_id) as label:
+        label("manifest and resume diff")
+        # file manifest AND committed-work diff both stay distributed:
+        # the manifest is the _metadata-derived listing
+        # (pipeline.media_manifest — executors stat, driver never holds
+        # the file list), and the diff is an ANTI-JOIN against the
+        # lineage table, never a python set — at 10^12-doc scale both
+        # sides have millions of rows.  On Iceberg the manifest is the
+        # snapshot's file list read as a table.
+        manifest = media_manifest(media)
+        if manifest is None:
+            raise ValueError("resumable extract requires file-backed media")
+        n_files = manifest.count()
+        files_df = manifest.select("path")
+        lineage = committed_lineage(spark, out_dir)
+        if lineage is not None:
+            files_df = files_df.join(
+                lineage.select(F.col("media_file").alias("path")).distinct(),
+                "path", "anti")
+        n_pending = files_df.count()
+        if n_pending:
+            label("scan")
+            nparts = max(1, min(n_pending,
+                                spark.sparkContext.defaultParallelism * 2))
+            kernel = make_lineage_kernel(out_dir, run_id, spark=spark)
+            # round-robin over the manifest's single (AQE-coalesced)
+            # partition: while n_pending <= nparts no task scans two files
+            new_lineage = (files_df.repartition(nparts)
+                           .mapInPandas(kernel, LINEAGE_SCHEMA))
+            # the commit needs a stage of its own: a no-shuffle
+            # coalesce(1) would pull the upstream mapInPandas into the
+            # one write task and scan every file serially.  Behind the
+            # shuffle, the single commit task starts only after every
+            # scan task has renamed its span files into place
+            # (lineage-last) and writes the run's one lineage file.
+            (new_lineage.repartition(1).write.mode("append")
+             .parquet(os.path.join(out_dir, "lineage")))
+        label("committed totals")
+        lineage = committed_lineage(spark, out_dir)
+        assert lineage is not None
+        agg = lineage.agg(F.sum("doc_count"), F.sum("span_count")).first()
     return ExtractRunResult(
         run_id=run_id,
         scanned_files=n_pending,

@@ -32,6 +32,10 @@ import pyarrow.parquet as pq
 FIXTURE_ROOT = os.path.join(os.path.dirname(os.path.dirname(
     os.path.dirname(os.path.abspath(__file__)))), "fixtures")
 
+#: target media part-file count: parts hold ``ceil(n_docs / 16)`` docs,
+#: capped at 32 (so the 16-doc smoke corpus is 16 one-doc parts)
+MEDIA_PARTS = 16
+
 SPAN_TYPE = pa.struct([
     ("kind", pa.string()), ("text", pa.string()),
     ("media_ref", pa.string()), ("offset", pa.int32()),
@@ -53,7 +57,7 @@ def materialize_fixtures(out_dir: str, n_docs: int, seed: int = 42,
     (used by throughput benches — see fixtures.py docstring)."""
     os.makedirs(out_dir, exist_ok=True)
     manifest_path = os.path.join(out_dir, "MANIFEST.json")
-    want = {"n_docs": n_docs, "seed": seed, "version": 11, "lossy": lossy}
+    want = {"n_docs": n_docs, "seed": seed, "version": 12, "lossy": lossy}
     if os.path.exists(manifest_path):
         with open(manifest_path) as f:
             if json.load(f) == want:
@@ -63,8 +67,11 @@ def materialize_fixtures(out_dir: str, n_docs: int, seed: int = 42,
     # TIFF/BMP payloads compress ~10:1 in parquet, so a single file /
     # row group would force every Spark read of the image column
     # through ONE task; many small part files give parallel scans
-    # (exactly how a 100 TB media table is laid out in practice)
-    chunk = min(32, max(1, (n_docs + workers - 1) // workers))
+    # (exactly how a 100 TB media table is laid out in practice).  The
+    # layout depends on n_docs only, never on the host's core count,
+    # so fixtures, goldens and plan-shape tests agree on every host;
+    # only the pool size below follows the cores.
+    chunk = min(32, max(1, -(-n_docs // MEDIA_PARTS)))
     tasks = [(i, min(chunk, n_docs - i), seed, lossy)
              for i in range(0, n_docs, chunk)]
     docs: list = []

@@ -1,7 +1,11 @@
 """Resumable extraction: per-partition lineage, checkpoint/resume,
 orphan invisibility, and final span equality after a resumed run."""
 
+import json
 import os
+import time
+import urllib.request
+from contextlib import contextmanager
 
 import pandas as pd
 import pytest
@@ -25,6 +29,19 @@ def spark():
 @pytest.fixture(scope="module")
 def smoke_dir():
     return fixture_dir("smoke", 16)
+
+
+def _assert_golden(spark, docs, smoke_dir, out_dir):
+    """The assembled output of ``out_dir`` equals expected_spans."""
+    emitted = emitted_spans(spark, out_dir)
+    got = (assemble_output(docs, emitted).toPandas()
+           .sort_values(["doc_id", "order"]).reset_index(drop=True))
+    exp = (pd.read_parquet(os.path.join(smoke_dir, "expected_spans.parquet"))
+           .sort_values(["doc_id", "order"]).reset_index(drop=True))
+    cols = ["doc_id", "kind", "text", "media_ref", "order"]
+    got["order"] = got["order"].astype("int32")
+    exp["order"] = exp["order"].astype("int32")
+    pd.testing.assert_frame_equal(got[cols], exp[cols])
 
 
 def test_resume_from_partial_run(spark, smoke_dir, tmp_path_factory):
@@ -65,15 +82,7 @@ def test_resume_from_partial_run(spark, smoke_dir, tmp_path_factory):
     assert lineage["checksum"].str.len().eq(32).all()
 
     # --- final assembled output equals the golden table
-    emitted = emitted_spans(spark, out_dir)
-    got = (assemble_output(docs, emitted).toPandas()
-           .sort_values(["doc_id", "order"]).reset_index(drop=True))
-    exp = (pd.read_parquet(os.path.join(smoke_dir, "expected_spans.parquet"))
-           .sort_values(["doc_id", "order"]).reset_index(drop=True))
-    cols = ["doc_id", "kind", "text", "media_ref", "order"]
-    got["order"] = got["order"].astype("int32")
-    exp["order"] = exp["order"].astype("int32")
-    pd.testing.assert_frame_equal(got[cols], exp[cols])
+    _assert_golden(spark, docs, smoke_dir, out_dir)
 
 
 def test_resume_many_files(spark, smoke_dir, tmp_path_factory):
@@ -120,3 +129,147 @@ def test_checksum_is_deterministic(spark, smoke_dir, tmp_path_factory):
           .sort_values("partition_id").reset_index(drop=True))
     assert (la["checksum"] == lb["checksum"]).all()
     assert (la["partition_id"] == lb["partition_id"]).all()
+
+
+def _spark_rest(spark, path):
+    """GET from the application's monitoring REST API (the UI port)."""
+    sc = spark.sparkContext
+    port = sc.uiWebUrl.rsplit(":", 1)[1]
+    url = (f"http://127.0.0.1:{port}/api/v1/applications/"
+           f"{sc.applicationId}{path}")
+    with urllib.request.urlopen(url, timeout=30) as r:
+        return json.loads(r.read())
+
+
+def _kernel_stage(spark, group, run_id):
+    """(numTasks, per-task shuffle records read) of the stage that ran
+    the lineage kernel in run ``run_id``, started under job group
+    ``group``.  The kernel stage is the stage of the run's ``scan``
+    jobs with the largest executor run time: Python UDF time shows
+    there, and the kernel decodes images while every other stage only
+    moves paths or lineage rows."""
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.time() + 30
+    while True:  # the listener bus reports finished jobs asynchronously
+        jobs = [tracker.getJobInfo(j)
+                for j in tracker.getJobIdsForGroup(group)]
+        stage_ids = [s for j in jobs if j is not None
+                     and _spark_rest(spark, f"/jobs/{j.jobId}")
+                     ["description"] == f"lineage {run_id}: scan"
+                     for s in j.stageIds]
+        done = all(j is not None and j.status == "SUCCEEDED" for j in jobs)
+        stages = [st for sid in stage_ids
+                  for st in _spark_rest(spark, f"/stages/{sid}")
+                  if st["status"] == "COMPLETE"]
+        if done and stages or time.time() > deadline:
+            break
+        time.sleep(0.2)
+    assert stages, f"no completed scan stage for run {run_id}"
+    st = max(stages, key=lambda s: s["executorRunTime"])
+    tasks = _spark_rest(spark, f"/stages/{st['stageId']}/{st['attemptId']}"
+                        "/taskList?length=100000")
+    return (tracker.getStageInfo(st["stageId"]).numTasks,
+            [t["taskMetrics"]["shuffleReadMetrics"]["recordsRead"]
+             for t in tasks])
+
+
+@contextmanager
+def _job_group(sc, group, description):
+    sc.setJobGroup(group, description)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+
+
+def _n_lineage_files(out_dir):
+    return sum(f.startswith("part-") and f.endswith(".parquet")
+               for f in os.listdir(os.path.join(out_dir, "lineage")))
+
+
+def test_resumable_scan_is_parallel(spark, smoke_dir, tmp_path_factory):
+    """The lineage kernel runs in min(n_pending, 2*defaultParallelism)
+    tasks — the one-file lineage commit must not fold the scan into
+    its own single task — and while n_pending <= 2*cores no task scans
+    two files.  Each run still appends exactly one lineage file, and a
+    resumed run assembles the golden spans."""
+    sc = spark.sparkContext
+    slots = 2 * sc.defaultParallelism
+    docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
+    media_dir = os.path.join(smoke_dir, "media.parquet")
+    parts = sorted(os.listdir(media_dir))
+    assert len(parts) > slots  # smoke is 16 parts on every host
+
+    def run(media, out_dir, group):
+        with _job_group(sc, group, "lineage parallel-scan test"):
+            return run_resumable_extract(spark, docs, media, out_dir)
+
+    # 3-file subset: 3 tasks, one file each
+    out_dir = str(tmp_path_factory.mktemp("parallel_out"))
+    subset = spark.read.parquet(*[os.path.join(media_dir, p)
+                                  for p in parts[:3]])
+    r1 = run(subset, out_dir, "lineage-par-subset")
+    assert r1.scanned_files == 3
+    n_tasks, per_task = _kernel_stage(spark, "lineage-par-subset", r1.run_id)
+    assert n_tasks == 3
+    assert sorted(per_task) == [1, 1, 1]
+    assert _n_lineage_files(out_dir) == 1
+
+    # resume over the full corpus: n_pending > 2*cores
+    full = spark.read.parquet(media_dir)
+    r2 = run(full, out_dir, "lineage-par-resume")
+    n_pending = len(parts) - 3
+    assert r2.scanned_files == n_pending
+    n_tasks, per_task = _kernel_stage(spark, "lineage-par-resume", r2.run_id)
+    assert n_tasks == min(n_pending, slots)
+    assert sum(per_task) == n_pending
+    assert _n_lineage_files(out_dir) == 2
+    # a no-op resume appends nothing
+    assert run(full, out_dir, "lineage-par-noop").scanned_files == 0
+    assert _n_lineage_files(out_dir) == 2
+    _assert_golden(spark, docs, smoke_dir, out_dir)
+
+    # full corpus from scratch
+    fresh = str(tmp_path_factory.mktemp("parallel_fresh"))
+    r3 = run(full, fresh, "lineage-par-full")
+    n_tasks, per_task = _kernel_stage(spark, "lineage-par-full", r3.run_id)
+    assert n_tasks == min(len(parts), slots)
+    assert sum(per_task) == len(parts)
+    assert _n_lineage_files(fresh) == 1
+
+
+def test_job_descriptions_label_phases_and_restore(spark, smoke_dir,
+                                                    tmp_path_factory):
+    """Every job of a run is labelled with its phase; the caller's job
+    description is restored afterwards, also when the run raises."""
+    sc = spark.sparkContext
+    docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
+    media_dir = os.path.join(smoke_dir, "media.parquet")
+    one = spark.read.parquet(os.path.join(media_dir,
+                                          sorted(os.listdir(media_dir))[0]))
+    out_dir = str(tmp_path_factory.mktemp("labels_out"))
+    with _job_group(sc, "lineage-labels", "caller label"):
+        res = run_resumable_extract(spark, docs, one, out_dir,
+                                    run_id="labels")
+        assert sc.getLocalProperty("spark.job.description") == "caller label"
+        sc.setJobDescription(None)
+        with pytest.raises(ValueError, match="file-backed"):
+            run_resumable_extract(
+                spark, docs, spark.createDataFrame(
+                    [("x", "png", b"y")],
+                    "media_ref string, format string, image binary"),
+                out_dir, run_id="labels-err")
+        assert sc.getLocalProperty("spark.job.description") is None
+    assert res.scanned_files == 1
+    deadline = time.time() + 30
+    while True:
+        descs = {_spark_rest(spark, f"/jobs/{j}")["description"]
+                 for j in sc.statusTracker().getJobIdsForGroup(
+                     "lineage-labels")}
+        if len(descs) >= 3 or time.time() > deadline:
+            break
+        time.sleep(0.2)
+    assert descs == {"lineage labels: manifest and resume diff",
+                     "lineage labels: scan",
+                     "lineage labels: committed totals"}

@@ -289,3 +289,54 @@ def test_manifest_distributed_path_same_spans(spark, smoke_dir,
            .sort_values(["doc_id", "order"]).reset_index(drop=True))
     cols = ["doc_id", "kind", "text", "media_ref", "order"]
     pd.testing.assert_frame_equal(got[cols], base[cols])
+
+
+def test_text_quality_rounds_like_duckdb(spark, tmp_path):
+    """q_text_quality's rounded ratios equal its DuckDB twin's exactly,
+    including exact decimal halves the double sits just below
+    (199/40 = 4.975 must give 4.97, as DuckDB rounds it), over a
+    seeded sweep of length/token/punctuation/digit ratios."""
+    import duckdb
+    import numpy as np
+
+    import __spark_entry__ as m
+
+    rng = np.random.default_rng(7)
+    letters, digits, punct = (np.array(list(a)) for a in
+                              ("abcdefghij", "0123456789", ".,;:!?"))
+
+    def doc():
+        # token counts and lengths whose ratios land on decimal halves
+        # (k/40, k/200 at 2 places; k/160, k/800 at 4), plus random ones
+        ntok = int(rng.choice([8, 40, 200, int(rng.integers(1, 200))]))
+        n = int(rng.choice([160, 800, 1600, int(rng.integers(1, 1800))]))
+        n = max(n, 2 * ntok - 1)
+        nchar = n - (ntok - 1)
+        cuts = np.sort(rng.choice(np.arange(1, nchar), ntok - 1,
+                                  replace=False))
+        p_punct, p_digit = rng.uniform(0, 0.3, 2)
+        kind = rng.choice(3, nchar, p=[1 - p_punct - p_digit, p_punct,
+                                       p_digit])
+        chars = np.where(kind == 0, rng.choice(letters, nchar),
+                         np.where(kind == 1, rng.choice(punct, nchar),
+                                  rng.choice(digits, nchar)))
+        return " ".join("".join(w) for w in np.split(chars, cuts))
+
+    # 40 tokens, 160 letters, 39 spaces: n/ntok = 199/40 = 4.975
+    texts = [" ".join(["abcd"] * 40)] + [doc() for _ in range(3000)]
+    assert len(texts[0]) == 199
+    pd.DataFrame({"doc_id": np.arange(len(texts), dtype="int64"),
+                  "text": texts}).to_parquet(tmp_path / "documents.parquet")
+    got = (m.q_text_quality(spark, str(tmp_path)).toPandas()
+           .sort_values("doc_id").reset_index(drop=True))
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{tmp_path / 'documents.parquet'}')")
+    exp = (con.execute(m.oracle_sql()["text_quality"]).fetchdf()
+           .sort_values("doc_id").reset_index(drop=True))
+    assert got.loc[0, "mean_word_len"] == exp.loc[0, "mean_word_len"] == 4.97
+    for c in ("punct_ratio", "digit_ratio", "mean_word_len"):
+        diff = got[c] != exp[c]
+        assert not diff.any(), (c, got.loc[diff, c].head(),
+                                exp.loc[diff, c].head())
+    assert (got["passes_quality"] == exp["passes_quality"]).all()
