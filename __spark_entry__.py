@@ -442,7 +442,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     F.lit(0))).alias("hits"),
         F.size(F.split(F.trim(F.lower(F.col("text"))), "\\s+"))
         .alias("ntok"))
-    ratio = F.round(F.col("hits") / F.col("ntok"), 4)
+    ratio = _round_double(F.col("hits") / F.col("ntok"), 4)
     return base.select(
         "doc_id", F.col("hits").cast("long").alias("stopword_hits"),
         ratio.alias("stopword_ratio"),
@@ -674,7 +674,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (scored.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= 5)
             .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    F.round("sim", 4).alias("cosine")))
+                    _round_double(F.col("sim"), 4).alias("cosine")))
 
 
 def _lsh_bands_df(e: DataFrame, n_planes: int = 8) -> DataFrame:

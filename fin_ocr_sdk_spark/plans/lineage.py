@@ -1,8 +1,9 @@
 """Resumable extraction with per-partition lineage (north rule).
 
-Unit of work = one media part file.  Pending files are spread over
-``min(n_pending, 2 * defaultParallelism)`` scan tasks; each completed
-unit yields a lineage row
+Unit of work = one media part file.  A run lists the media files once
+(the listing the pipeline scan uses), subtracts the committed ones and
+scans the rest in ONE Spark job of ``min(n_pending, 2 *
+defaultParallelism)`` tasks.  Each scanned unit yields a lineage row
 
     (partition_id, media_file, doc_count, span_count, checksum,
      run_id, wall_ms)
@@ -10,18 +11,25 @@ unit yields a lineage row
 and its emitted spans land in their own parquet file named by the
 partition id.  A span file is visible ONLY through its lineage row, so
 a run killed mid-flight leaves at most orphan span files that the
-reader never picks up — re-running skips every committed partition via
-an anti-join on the lineage table and scans only the remainder.  (On a
+reader never picks up — re-running skips every committed partition and
+scans only the remainder.
+
+The scan job collects the run's lineage rows to the driver, which
+commits them as ONE lineage file (tmp write + atomic rename) after
+every task has renamed its span files into place: lineage-last.  (On a
 real deployment both tables are Iceberg and the span+lineage append is
-one atomic snapshot commit; the parquet stand-in keeps the same
-protocol with lineage-last ordering.)  All lineage rows of one run are
-committed by a single write task, so each run appends exactly one
-lineage file.
+one atomic snapshot commit, also made by the driver; the parquet
+stand-in keeps the same protocol.)  The run's totals are the committed
+totals plus the collected rows, so nothing is read back.  A fresh run
+on a bare local scan therefore starts exactly one Spark job; a resume
+adds one action for the committed totals and paths.  Listings too
+large for the driver are streamed and scanned in chunks of at most
+``pipeline._MANIFEST_DRIVER_CAP`` files, one lineage file per chunk.
 
 Every Spark job the run starts carries a phase label
-(``lineage <run_id>: manifest and resume diff | scan | committed
-totals``) as its job description, so a run's jobs can be told apart
-in the UI, the monitoring API and the status tracker.
+(``lineage <run_id>: manifest and resume diff | scan``) as its job
+description, so a run's jobs can be told apart in the UI, the
+monitoring API and the status tracker.
 
 The reference has no notion of this — it is request-scoped
 (src/context.ts) — but the slow/hung-request accounting it does keep
@@ -39,12 +47,12 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (IntegerType, LongType, StringType,
                                StructField, StructType)
 
-from .pipeline import SPAN_OUT_COLS, explode_spans, make_scan_batches
+from .pipeline import SPAN_OUT_COLS, explode_spans
 
 LINEAGE_SCHEMA = StructType([
     StructField("partition_id", StringType()),
@@ -73,12 +81,23 @@ def make_lineage_kernel(out_dir: str, run_id: str, templates=None,
     """mapInPandas kernel over (path): for each media file in the task's
     batches, scan it, write its emitted spans to
     <out>/spans/<partition_id>.parquet and yield its lineage row.  The
-    span write happens BEFORE the lineage row is returned (lineage-last
+    span file is renamed into place BEFORE its lineage row is returned;
+    the driver commits the rows once the job has finished (lineage-last
     commit protocol)."""
     if templates is None:
         from .scan import get_default_templates
         templates = get_default_templates()
-    bc = spark.sparkContext.broadcast(templates) if spark else None
+    if spark is not None:
+        # the kernel closes over the broadcast handle only: a closure
+        # that also names ``templates`` ships the ~150 KB set in every
+        # task's command next to the broadcast
+        bc = spark.sparkContext.broadcast(templates)
+
+        def get_templates():
+            return bc.value
+    else:
+        def get_templates():
+            return templates
     spans_dir = os.path.join(out_dir, "spans")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -89,7 +108,7 @@ def make_lineage_kernel(out_dir: str, run_id: str, templates=None,
         from .scan import scan_check
         pa.set_cpu_count(1)
         pa.set_io_thread_count(1)
-        tmpl = bc.value if bc is not None else templates
+        tmpl = get_templates()
         os.makedirs(spans_dir, exist_ok=True)
         for pdf in batches:
             rows = {k: [] for k in ("partition_id", "media_file",
@@ -167,11 +186,79 @@ class ExtractRunResult:
     span_count: int
 
 
+def _lineage_dir(out_dir: str) -> str:
+    return os.path.join(out_dir, "lineage")
+
+
+def _has_committed_lineage(out_dir: str) -> bool:
+    """True once a lineage file has been committed under ``out_dir``.
+    Hidden names (a crashed commit's ``.``-prefixed tmp file, Spark's
+    ``_SUCCESS``) are not commits; the parquet reader skips them too."""
+    path = _lineage_dir(out_dir)
+    return os.path.isdir(path) and any(
+        not f.startswith((".", "_")) for f in os.listdir(path))
+
+
 def committed_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = os.path.join(out_dir, "lineage")
-    if not os.path.isdir(path) or not os.listdir(path):
+    """The committed lineage table, read with its fixed schema (no
+    schema-inference job), or None before the first commit."""
+    if not _has_committed_lineage(out_dir):
         return None
-    return spark.read.parquet(path)
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(_lineage_dir(out_dir))
+
+
+def _commit_lineage(out_dir: str, name: str, rows: list) -> None:
+    """Driver-side commit of one lineage file: the rows are written
+    under a hidden tmp name and renamed into place, the protocol the
+    kernel uses for span files (and the stand-in for an Iceberg
+    snapshot commit, which the driver also makes)."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    path = _lineage_dir(out_dir)
+    os.makedirs(path, exist_ok=True)
+    final = os.path.join(path, f"part-{name}.parquet")
+    tmp = os.path.join(path, f".part-{name}.parquet.tmp")
+    papq.write_table(pa.Table.from_pylist(
+        [r.asDict() for r in rows],
+        schema=to_arrow_schema(LINEAGE_SCHEMA)), tmp)
+    os.replace(tmp, final)  # atomic on posix
+
+
+def _scan_and_commit(spark: SparkSession, kernel, files: list,
+                     out_dir: str, name: str) -> "tuple[int, int]":
+    """Scan ``files`` ((path, size) pairs) in ONE Spark job and commit
+    their lineage rows as one lineage file; returns the (doc_count,
+    span_count) the rows add.
+
+    The files are striped over ``nparts = min(n, 2 *
+    defaultParallelism)`` stripes in size-descending order.  The job's
+    input is ``range(nparts)`` in as many partitions, one stripe index
+    each, and the stripes travel as a broadcast (fetched once per
+    executor, not shipped in every task), so every task scans exactly
+    its stripe: one file per task while n <= 2 * cores, with no
+    shuffle and no Python-side input conversion.  ``collect()`` returns
+    only after every task has renamed its span files into place, so the
+    lineage commit after it is last."""
+    sc = spark.sparkContext
+    nparts = max(1, min(len(files), sc.defaultParallelism * 2))
+    by_size = sorted(files, key=lambda f: f[1], reverse=True)
+    stripes = sc.broadcast([[p for p, _ in by_size[i::nparts]]
+                            for i in range(nparts)])
+
+    def scan_stripes(batches: Iterator[pd.DataFrame]
+                     ) -> Iterator[pd.DataFrame]:
+        return kernel(pd.DataFrame({"path": stripes.value[i]})
+                      for pdf in batches for i in pdf["id"])
+
+    try:
+        rows = (spark.range(0, nparts, 1, nparts)
+                .mapInPandas(scan_stripes, LINEAGE_SCHEMA).collect())
+    finally:
+        stripes.destroy()
+    _commit_lineage(out_dir, name, rows)
+    return (sum(r["doc_count"] for r in rows),
+            sum(r["span_count"] for r in rows))
 
 
 @contextmanager
@@ -192,62 +279,96 @@ def _job_phases(spark: SparkSession, run_id: str):
         sc.setJobDescription(prev)
 
 
+def _stream_pending(manifest: DataFrame, lineage: DataFrame | None,
+                    cap: int):
+    """Yields (chunk, n_committed) pairs over a manifest too large for
+    the driver: the pending files streamed with ``toLocalIterator()``
+    in chunks of at most ``cap`` (path, size) pairs, each with the
+    number of already-committed files passed over since the previous
+    chunk.  The last chunk may be empty."""
+    if lineage is None:
+        manifest = manifest.withColumn("done", F.lit(False))
+    else:
+        manifest = manifest.join(
+            lineage.select(F.col("media_file").alias("path"),
+                           F.lit(True).alias("done")).distinct(),
+            "path", "left")
+    chunk: list = []
+    committed = 0
+    for row in manifest.toLocalIterator():
+        if row["done"]:
+            committed += 1
+            continue
+        chunk.append((row["path"], row["size"]))
+        if len(chunk) == cap:
+            yield chunk, committed
+            chunk, committed = [], 0
+    yield chunk, committed
+
+
 def run_resumable_extract(spark: SparkSession, documents: DataFrame,
                           media: DataFrame, out_dir: str,
                           run_id: str | None = None) -> ExtractRunResult:
     """Scan every media file not yet committed to the lineage table;
     idempotent and restart-safe.  Returns run stats."""
-    from .pipeline import media_manifest
+    from . import pipeline
     run_id = run_id or uuid.uuid4().hex[:12]
     os.makedirs(out_dir, exist_ok=True)
     with _job_phases(spark, run_id) as label:
         label("manifest and resume diff")
-        # file manifest AND committed-work diff both stay distributed:
-        # the manifest is the _metadata-derived listing
-        # (pipeline.media_manifest — executors stat, driver never holds
-        # the file list), and the diff is an ANTI-JOIN against the
-        # lineage table, never a python set — at 10^12-doc scale both
-        # sides have millions of rows.  On Iceberg the manifest is the
-        # snapshot's file list read as a table.
-        manifest = media_manifest(media)
-        if manifest is None:
+        # the listing the pipeline scan uses: zero jobs for a bare local
+        # scan, one bounded collect otherwise (on Iceberg, the
+        # snapshot's file list)
+        files, manifest = pipeline.list_media_files(media)
+        if files is None and manifest is None:
             raise ValueError("resumable extract requires file-backed media")
-        n_files = manifest.count()
-        files_df = manifest.select("path")
         lineage = committed_lineage(spark, out_dir)
-        if lineage is not None:
-            files_df = files_df.join(
-                lineage.select(F.col("media_file").alias("path")).distinct(),
-                "path", "anti")
-        n_pending = files_df.count()
-        if n_pending:
+        docs = spans = 0
+        if manifest is None:
+            committed = 0
+            if lineage is not None:
+                # ONE action: the lineage rows of listed files come back
+                # (bounded by the listing, never the whole table) while
+                # observed metrics sum the committed totals in passing
+                totals = Observation()
+                listed = spark.createDataFrame(
+                    pd.DataFrame({"media_file": [p for p, _ in files]},
+                                 dtype=object), "media_file string")
+                done = {r["media_file"] for r in (
+                    lineage.observe(totals,
+                                    F.sum("doc_count").alias("docs"),
+                                    F.sum("span_count").alias("spans"))
+                    .join(F.broadcast(listed), "media_file", "semi")
+                    .select("media_file").collect())}
+                docs, spans = totals.get["docs"], totals.get["spans"]
+                committed = len(done)
+                files = [f for f in files if f[0] not in done]
+            chunks = [(files, committed)]
+        else:
+            # too many files to hold on the driver: scan and commit the
+            # streamed pending list chunk by chunk
+            if lineage is not None:
+                docs, spans = lineage.agg(F.sum("doc_count"),
+                                          F.sum("span_count")).first()
+            chunks = _stream_pending(manifest, lineage,
+                                     pipeline._MANIFEST_DRIVER_CAP)
+        docs, spans = int(docs or 0), int(spans or 0)
+        kernel = None
+        scanned = skipped = 0
+        for i, (chunk, committed) in enumerate(chunks):
+            skipped += committed
+            if not chunk:
+                continue
             label("scan")
-            nparts = max(1, min(n_pending,
-                                spark.sparkContext.defaultParallelism * 2))
-            kernel = make_lineage_kernel(out_dir, run_id, spark=spark)
-            # round-robin over the manifest's single (AQE-coalesced)
-            # partition: while n_pending <= nparts no task scans two files
-            new_lineage = (files_df.repartition(nparts)
-                           .mapInPandas(kernel, LINEAGE_SCHEMA))
-            # the commit needs a stage of its own: a no-shuffle
-            # coalesce(1) would pull the upstream mapInPandas into the
-            # one write task and scan every file serially.  Behind the
-            # shuffle, the single commit task starts only after every
-            # scan task has renamed its span files into place
-            # (lineage-last) and writes the run's one lineage file.
-            (new_lineage.repartition(1).write.mode("append")
-             .parquet(os.path.join(out_dir, "lineage")))
-        label("committed totals")
-        lineage = committed_lineage(spark, out_dir)
-        assert lineage is not None
-        agg = lineage.agg(F.sum("doc_count"), F.sum("span_count")).first()
-    return ExtractRunResult(
-        run_id=run_id,
-        scanned_files=n_pending,
-        skipped_files=n_files - n_pending,
-        doc_count=int(agg[0] or 0),
-        span_count=int(agg[1] or 0),
-    )
+            kernel = kernel or make_lineage_kernel(out_dir, run_id,
+                                                   spark=spark)
+            d, s = _scan_and_commit(spark, kernel, chunk, out_dir,
+                                    f"{run_id}-{i:05d}")
+            docs, spans, scanned = docs + d, spans + s, scanned + len(chunk)
+            label("manifest and resume diff")
+    return ExtractRunResult(run_id=run_id, scanned_files=scanned,
+                            skipped_files=skipped, doc_count=docs,
+                            span_count=spans)
 
 
 def emitted_spans(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -258,7 +379,9 @@ def emitted_spans(spark: SparkSession, out_dir: str) -> DataFrame:
     partition id recovered from each span file's name — no driver-side
     collect of the lineage table (millions of rows at 10^12-doc scale).
     Uncommitted ``<pid>.parquet`` orphans may be *opened* by the scan
-    but every row they contribute is dropped by the semi-join."""
+    but every row they contribute is dropped by the semi-join.  A
+    semi-join emits each span row at most once, so the lineage side
+    needs no ``distinct``."""
     lineage = committed_lineage(spark, out_dir)
     if lineage is None:
         raise FileNotFoundError(f"no committed lineage under {out_dir}")
@@ -276,8 +399,7 @@ def emitted_spans(spark: SparkSession, out_dir: str) -> DataFrame:
                              F.regexp_extract(F.input_file_name(),
                                               r"([0-9a-f]+)\.parquet$", 1)))
     return (all_spans
-            .join(lineage.select("partition_id").distinct(),
-                  "partition_id", "semi")
+            .join(lineage.select("partition_id"), "partition_id", "semi")
             .drop("partition_id"))
 
 

@@ -375,28 +375,43 @@ def _local_bare_manifest(media: DataFrame) -> "list[tuple[str, int]] | None":
         return None
 
 
+def list_media_files(
+        media: DataFrame,
+) -> tuple[list[tuple[str, int]] | None, DataFrame | None]:
+    """The media table's part files, listed once for every scan path:
+    ``(files, None)`` with ``files`` the (path, size) list when it fits
+    the driver, ``(None, manifest)`` with the distributed
+    :func:`media_manifest` when it holds more than
+    ``_MANIFEST_DRIVER_CAP`` files, ``(None, None)`` when media is not
+    file-backed.  A bare local scan is listed without a job
+    (:func:`_local_bare_manifest`); any other plan pays ONE probe job:
+    ``limit(cap+1)`` collects the whole manifest when it fits, and
+    cap+1 rows back means the manifest is too big to hold on the
+    driver and stays distributed."""
+    files = _local_bare_manifest(media)
+    if files is not None:
+        return files, None
+    manifest = media_manifest(media)
+    if manifest is None:
+        return None, None
+    rows = manifest.limit(_MANIFEST_DRIVER_CAP + 1).collect()
+    if len(rows) > _MANIFEST_DRIVER_CAP:
+        return None, manifest
+    return [(r["path"], r["size"]) for r in rows], None
+
+
 def _media_files_df(media: DataFrame) -> DataFrame | None:
     spark = media.sparkSession
     par = spark.sparkContext.defaultParallelism
-    files: "list | None" = _local_bare_manifest(media)
-    if files is None:
-        manifest = media_manifest(media)
-        if manifest is None:
-            return None
-        # ONE probe job decides the path: limit(cap+1) collects the
-        # whole manifest when it fits (the common case pays exactly the
-        # one job it always paid); cap+1 rows back means the manifest
-        # is too big to stripe on the driver, and the explode + hash
-        # repartition path stays entirely distributed (at 10^6+ units
-        # hash placement balances by the law of large numbers, so LPT
-        # buys nothing worth a driver round-trip of that size).
-        rows = manifest.limit(_MANIFEST_DRIVER_CAP + 1).collect()
-        if not rows:
-            return None
-        if len(rows) > _MANIFEST_DRIVER_CAP:
-            total = int(manifest.agg(F.sum("size")).collect()[0][0])
-            return _media_files_df_distributed(manifest, total, par)
-        files = [(r["path"], r["size"]) for r in rows]
+    files, manifest = list_media_files(media)
+    if manifest is not None:
+        # at 10^6+ units hash placement balances by the law of large
+        # numbers, so LPT buys nothing worth a driver round-trip of
+        # that size: explode + hash repartition stays distributed
+        total = int(manifest.agg(F.sum("size")).collect()[0][0])
+        return _media_files_df_distributed(manifest, total, par)
+    if not files:
+        return None
     # metadata-scale file list (driver stat for bare local scans, the
     # engine's distributed listing otherwise — never a driver stat loop
     # against an object store).  Files split into sub-file row-slice

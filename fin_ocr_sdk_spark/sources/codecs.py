@@ -131,6 +131,22 @@ def encode_bmp(img: np.ndarray) -> bytes:
     return header + dib + palette + rows
 
 
+def _bmp_pixel_rows(data: bytes, pixel_offset: int, h: int,
+                    row_bytes: int) -> np.ndarray:
+    """The (h, row_size) pixel rows of a BMP, rows padded to 4 bytes.
+    Writers may omit the final row's padding, so only
+    ``(h - 1) * row_size + row_bytes`` bytes are required and a short
+    tail is zero-padded; anything shorter raises ValueError."""
+    row_size = (row_bytes + 3) & ~3
+    buf = data[pixel_offset:pixel_offset + row_size * h]
+    if h and len(buf) < (h - 1) * row_size + row_bytes:
+        raise ValueError(f"truncated BMP pixel data: {len(buf)} bytes for "
+                         f"{h} rows of {row_bytes}")
+    if len(buf) < row_size * h:
+        buf = bytes(buf) + b"\x00" * (row_size * h - len(buf))
+    return np.frombuffer(buf, dtype=np.uint8).reshape(h, row_size)
+
+
 def decode_bmp(data: bytes) -> np.ndarray:
     if data[:2] != b"BM":
         raise ValueError("not a BMP")
@@ -146,22 +162,15 @@ def decode_bmp(data: bytes) -> np.ndarray:
         gray_palette = np.clip(
             np.round(palette @ np.array([0.114, 0.587, 0.299])), 0, 255
         ).astype(np.uint8)
-        row_size = (w + 3) & ~3
-        # one frombuffer over the whole pixel region (a short buffer
-        # raises ValueError on reshape, same error contract as the old
-        # per-row loop), strip the 4-byte row padding, then one palette
-        # gather; bottom-up files are a view flip
-        px = np.frombuffer(
-            data[pixel_offset:pixel_offset + row_size * h],
-            dtype=np.uint8).reshape(h, row_size)[:, :w]
+        # one frombuffer over the whole pixel region, strip the 4-byte
+        # row padding, then one palette gather; bottom-up files are a
+        # view flip
+        px = _bmp_pixel_rows(data, pixel_offset, h, w)[:, :w]
         out = gray_palette[px if top_down else px[::-1]]
         return np.ascontiguousarray(out)
     if bpp == 24:
-        row_size = (w * 3 + 3) & ~3
         wts = np.array([0.114, 0.587, 0.299])  # BGR order
-        px = np.frombuffer(
-            data[pixel_offset:pixel_offset + row_size * h],
-            dtype=np.uint8).reshape(h, row_size)[:, :w * 3]
+        px = _bmp_pixel_rows(data, pixel_offset, h, w * 3)[:, :w * 3]
         px = (px if top_down else px[::-1]).reshape(-1, 3)
         # (N, 3) @ (3,) keeps the per-pixel dot shape (and summation
         # order) of the old per-row (w, 3) @ (3,) exactly

@@ -10,8 +10,9 @@ multi-executor cluster.  This script is that job:
         --input-dir /data/corpus --out /data/out [--resumable]
 
 Reads documents.parquet + media.parquet under --input-dir, runs
-extract_spans (or the lineage-committed resumable variant), writes the
-ordered span table to --out/spans, and prints one JSON status line.
+extract_spans (or the lineage-committed resumable variant, whose
+lineage state lives under --out/resume), writes the ordered span table
+to --out/spans, and prints one JSON status line.
 No repo-path imports: everything comes from the shipped zip (or an
 installed package), exactly as on a real cluster.
 """
@@ -55,8 +56,11 @@ def main() -> None:
         from fin_ocr_sdk_spark.plans.lineage import (assemble_output,
                                                      emitted_spans,
                                                      run_resumable_extract)
-        stats = run_resumable_extract(spark, docs, media, args.out)
-        out = assemble_output(docs, emitted_spans(spark, args.out))
+        # lineage state (committed span files + lineage) lives apart
+        # from the final table: --out/spans is overwritten each run
+        state = os.path.join(args.out, "resume")
+        stats = run_resumable_extract(spark, docs, media, state)
+        out = assemble_output(docs, emitted_spans(spark, state))
         extra = {"scanned_files": stats.scanned_files,
                  "skipped_files": stats.skipped_files}
     else:

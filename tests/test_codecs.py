@@ -277,3 +277,31 @@ def test_jpeg_frame_size_cap_is_valueerror():
         data[sof + 7:sof + 9] = b"\xff\x18"   # width 65304
         with pytest.raises(ValueError, match="33 MP"):
             decode_jpeg(bytes(data))
+
+
+def _bmp24(img: np.ndarray) -> bytes:
+    """Bottom-up 24-bit BMP of a (h, w, 3) RGB image, rows padded."""
+    h, w, _ = img.shape
+    row_size = (w * 3 + 3) & ~3
+    rows = b"".join(img[y, :, ::-1].tobytes() + b"\x00" * (row_size - w * 3)
+                    for y in range(h - 1, -1, -1))
+    header = struct.pack("<2sIHHI", b"BM", 54 + len(rows), 0, 0, 54)
+    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(rows),
+                      2835, 2835, 0, 0)
+    return header + dib + rows
+
+
+def test_bmp_final_row_without_padding():
+    """A BMP whose final row omits its padding decodes bit-exactly like
+    the padded file, for 8-bit and 24-bit pixels; cutting into the
+    final row's pixels still raises ValueError."""
+    rng = np.random.default_rng(3)
+    gray = rng.integers(0, 256, (5, 7), dtype=np.uint8)
+    rgb = rng.integers(0, 256, (5, 7, 3), dtype=np.uint8)
+    for data, pad in ((codecs.encode_bmp(gray), 1), (_bmp24(rgb), 3)):
+        full = codecs.decode_image(data, "bmp")
+        assert full.shape == (5, 7)
+        assert np.array_equal(codecs.decode_image(data[:-pad], "bmp"), full)
+        with pytest.raises(ValueError):
+            codecs.decode_image(data[:-pad - 1], "bmp")
+    assert np.array_equal(codecs.decode_image(codecs.encode_bmp(gray)), gray)

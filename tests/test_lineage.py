@@ -9,6 +9,7 @@ from contextlib import contextmanager
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from fin_ocr_sdk_spark.plans.lineage import (assemble_output,
                                              committed_lineage,
@@ -141,36 +142,69 @@ def _spark_rest(spark, path):
         return json.loads(r.read())
 
 
-def _kernel_stage(spark, group, run_id):
-    """(numTasks, per-task shuffle records read) of the stage that ran
-    the lineage kernel in run ``run_id``, started under job group
-    ``group``.  The kernel stage is the stage of the run's ``scan``
-    jobs with the largest executor run time: Python UDF time shows
-    there, and the kernel decodes images while every other stage only
-    moves paths or lineage rows."""
-    tracker = spark.sparkContext.statusTracker()
+def _jobs_of(spark, group):
+    """Ids of the jobs started under job group ``group``, all finished.
+    The listener bus delivers events in order, so once a marker job run
+    afterwards shows as finished, no earlier job is missing."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    marker = f"{group}-barrier-{time.monotonic_ns()}"
+    with _job_group(sc, marker, "listener barrier"):
+        sc.parallelize([0], 1).count()
     deadline = time.time() + 30
-    while True:  # the listener bus reports finished jobs asynchronously
-        jobs = [tracker.getJobInfo(j)
-                for j in tracker.getJobIdsForGroup(group)]
-        stage_ids = [s for j in jobs if j is not None
-                     and _spark_rest(spark, f"/jobs/{j.jobId}")
-                     ["description"] == f"lineage {run_id}: scan"
-                     for s in j.stageIds]
-        done = all(j is not None and j.status == "SUCCEEDED" for j in jobs)
-        stages = [st for sid in stage_ids
-                  for st in _spark_rest(spark, f"/stages/{sid}")
-                  if st["status"] == "COMPLETE"]
-        if done and stages or time.time() > deadline:
-            break
-        time.sleep(0.2)
-    assert stages, f"no completed scan stage for run {run_id}"
-    st = max(stages, key=lambda s: s["executorRunTime"])
-    tasks = _spark_rest(spark, f"/stages/{st['stageId']}/{st['attemptId']}"
-                        "/taskList?length=100000")
-    return (tracker.getStageInfo(st["stageId"]).numTasks,
-            [t["taskMetrics"]["shuffleReadMetrics"]["recordsRead"]
-             for t in tasks])
+    while not any(tracker.getJobInfo(j).status == "SUCCEEDED"
+                  for j in tracker.getJobIdsForGroup(marker)):
+        assert time.time() < deadline, "listener bus did not drain"
+        time.sleep(0.1)
+    return tracker.getJobIdsForGroup(group)
+
+
+def _scan_tasks(spark, group, run_id):
+    """numTasks of the stage that ran the lineage kernel in run
+    ``run_id``, started under job group ``group``: the one stage of the
+    run's one ``scan`` job."""
+    tracker = spark.sparkContext.statusTracker()
+    scan = [j for j in _jobs_of(spark, group)
+            if _spark_rest(spark, f"/jobs/{j}")["description"]
+            == f"lineage {run_id}: scan"]
+    assert len(scan) == 1, f"run {run_id} started {len(scan)} scan jobs"
+    (stage_id,) = tracker.getJobInfo(scan[0]).stageIds
+    return tracker.getStageInfo(stage_id).numTasks
+
+
+@pytest.fixture
+def task_log(monkeypatch, tmp_path):
+    """Wraps the lineage kernel so each scan task appends the paths it
+    scans to ``<log>/<stage>-<partition>-<attempt>``; yields a reader
+    returning the files-per-task counts logged since the last read."""
+    from fin_ocr_sdk_spark.plans import lineage as L
+    log_dir = str(tmp_path / "task_log")
+    os.makedirs(log_dir)
+    real = L.make_lineage_kernel
+
+    def logged_kernel(*args, **kwargs):
+        kernel = real(*args, **kwargs)
+
+        def logged(batches):
+            from pyspark import TaskContext
+            tc = TaskContext.get()
+            name = f"{tc.stageId()}-{tc.partitionId()}-{tc.attemptNumber()}"
+            for pdf in batches:
+                with open(os.path.join(log_dir, name), "a") as f:
+                    f.writelines(p + "\n" for p in pdf["path"])
+                yield from kernel(iter([pdf]))
+        return logged
+
+    monkeypatch.setattr(L, "make_lineage_kernel", logged_kernel)
+
+    def files_per_task():
+        counts = []
+        for name in os.listdir(log_dir):
+            with open(os.path.join(log_dir, name)) as f:
+                counts.append(len(f.read().split()))
+            os.remove(os.path.join(log_dir, name))
+        return sorted(counts)
+    return files_per_task
 
 
 @contextmanager
@@ -188,12 +222,13 @@ def _n_lineage_files(out_dir):
                for f in os.listdir(os.path.join(out_dir, "lineage")))
 
 
-def test_resumable_scan_is_parallel(spark, smoke_dir, tmp_path_factory):
+def test_resumable_scan_is_parallel(spark, smoke_dir, tmp_path_factory,
+                                    task_log):
     """The lineage kernel runs in min(n_pending, 2*defaultParallelism)
     tasks — the one-file lineage commit must not fold the scan into
-    its own single task — and while n_pending <= 2*cores no task scans
-    two files.  Each run still appends exactly one lineage file, and a
-    resumed run assembles the golden spans."""
+    one task — and while n_pending <= 2*cores no task scans two files.
+    Each run still appends exactly one lineage file, and a resumed run
+    assembles the golden spans."""
     sc = spark.sparkContext
     slots = 2 * sc.defaultParallelism
     docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
@@ -211,9 +246,8 @@ def test_resumable_scan_is_parallel(spark, smoke_dir, tmp_path_factory):
                                   for p in parts[:3]])
     r1 = run(subset, out_dir, "lineage-par-subset")
     assert r1.scanned_files == 3
-    n_tasks, per_task = _kernel_stage(spark, "lineage-par-subset", r1.run_id)
-    assert n_tasks == 3
-    assert sorted(per_task) == [1, 1, 1]
+    assert _scan_tasks(spark, "lineage-par-subset", r1.run_id) == 3
+    assert task_log() == [1, 1, 1]
     assert _n_lineage_files(out_dir) == 1
 
     # resume over the full corpus: n_pending > 2*cores
@@ -221,8 +255,10 @@ def test_resumable_scan_is_parallel(spark, smoke_dir, tmp_path_factory):
     r2 = run(full, out_dir, "lineage-par-resume")
     n_pending = len(parts) - 3
     assert r2.scanned_files == n_pending
-    n_tasks, per_task = _kernel_stage(spark, "lineage-par-resume", r2.run_id)
+    n_tasks = _scan_tasks(spark, "lineage-par-resume", r2.run_id)
     assert n_tasks == min(n_pending, slots)
+    per_task = task_log()
+    assert len(per_task) == n_tasks
     assert sum(per_task) == n_pending
     assert _n_lineage_files(out_dir) == 2
     # a no-op resume appends nothing
@@ -233,8 +269,10 @@ def test_resumable_scan_is_parallel(spark, smoke_dir, tmp_path_factory):
     # full corpus from scratch
     fresh = str(tmp_path_factory.mktemp("parallel_fresh"))
     r3 = run(full, fresh, "lineage-par-full")
-    n_tasks, per_task = _kernel_stage(spark, "lineage-par-full", r3.run_id)
+    n_tasks = _scan_tasks(spark, "lineage-par-full", r3.run_id)
     assert n_tasks == min(len(parts), slots)
+    per_task = task_log()
+    assert len(per_task) == n_tasks
     assert sum(per_task) == len(parts)
     assert _n_lineage_files(fresh) == 1
 
@@ -246,12 +284,18 @@ def test_job_descriptions_label_phases_and_restore(spark, smoke_dir,
     sc = spark.sparkContext
     docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
     media_dir = os.path.join(smoke_dir, "media.parquet")
-    one = spark.read.parquet(os.path.join(media_dir,
-                                          sorted(os.listdir(media_dir))[0]))
+    # a filtered plan lists its files with a job (a bare local scan
+    # lists without one), so every phase that can start jobs does
+    one = (spark.read.parquet(os.path.join(media_dir,
+                                           sorted(os.listdir(media_dir))[0]))
+           .filter(F.col("media_ref").isNotNull()))
     out_dir = str(tmp_path_factory.mktemp("labels_out"))
     with _job_group(sc, "lineage-labels", "caller label"):
         res = run_resumable_extract(spark, docs, one, out_dir,
                                     run_id="labels")
+        assert sc.getLocalProperty("spark.job.description") == "caller label"
+        again = run_resumable_extract(spark, docs, one, out_dir,
+                                      run_id="labels-resume")
         assert sc.getLocalProperty("spark.job.description") == "caller label"
         sc.setJobDescription(None)
         with pytest.raises(ValueError, match="file-backed"):
@@ -262,14 +306,79 @@ def test_job_descriptions_label_phases_and_restore(spark, smoke_dir,
                 out_dir, run_id="labels-err")
         assert sc.getLocalProperty("spark.job.description") is None
     assert res.scanned_files == 1
-    deadline = time.time() + 30
-    while True:
-        descs = {_spark_rest(spark, f"/jobs/{j}")["description"]
-                 for j in sc.statusTracker().getJobIdsForGroup(
-                     "lineage-labels")}
-        if len(descs) >= 3 or time.time() > deadline:
-            break
-        time.sleep(0.2)
+    assert (again.scanned_files, again.skipped_files) == (0, 1)
+    descs = {_spark_rest(spark, f"/jobs/{j}")["description"]
+             for j in _jobs_of(spark, "lineage-labels")}
     assert descs == {"lineage labels: manifest and resume diff",
                      "lineage labels: scan",
-                     "lineage labels: committed totals"}
+                     "lineage labels-resume: manifest and resume diff"}
+
+
+def test_run_job_count(spark, smoke_dir, tmp_path_factory, monkeypatch):
+    """The control plane's fixed cost: a fresh run on a bare scan starts
+    exactly one Spark job (the scan), a no-op resume at most three and
+    no scan; past the driver cap the pending list is scanned and
+    committed in chunks of at most the cap, one lineage file each."""
+    from fin_ocr_sdk_spark.plans import pipeline
+    sc = spark.sparkContext
+    docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
+    media_dir = os.path.join(smoke_dir, "media.parquet")
+    media = spark.read.parquet(media_dir)
+    n_parts = len(os.listdir(media_dir))
+    out_dir = str(tmp_path_factory.mktemp("jobs_out"))
+
+    with _job_group(sc, "lineage-jobs-fresh", "job count test"):
+        fresh = run_resumable_extract(spark, docs, media, out_dir)
+    assert fresh.scanned_files == n_parts
+    assert len(_jobs_of(spark, "lineage-jobs-fresh")) == 1
+
+    with _job_group(sc, "lineage-jobs-noop", "job count test"):
+        noop = run_resumable_extract(spark, docs, media, out_dir)
+    assert (noop.scanned_files, noop.skipped_files) == (0, n_parts)
+    assert (noop.doc_count, noop.span_count) == (fresh.doc_count,
+                                                 fresh.span_count)
+    jobs = _jobs_of(spark, "lineage-jobs-noop")
+    assert len(jobs) <= 3
+    assert not any(_spark_rest(spark, f"/jobs/{j}")["description"]
+                   == f"lineage {noop.run_id}: scan" for j in jobs)
+
+    monkeypatch.setattr(pipeline, "_MANIFEST_DRIVER_CAP", 5)
+    chunked = str(tmp_path_factory.mktemp("jobs_chunked"))
+    res = run_resumable_extract(spark, docs, media, chunked)
+    assert (res.scanned_files, res.skipped_files) == (n_parts, 0)
+    assert res.doc_count == fresh.doc_count
+    assert _n_lineage_files(chunked) == -(-n_parts // 5)
+    again = run_resumable_extract(spark, docs, media, chunked)
+    assert (again.scanned_files, again.skipped_files) == (0, n_parts)
+    assert _n_lineage_files(chunked) == -(-n_parts // 5)
+    _assert_golden(spark, docs, smoke_dir, chunked)
+
+
+def test_crashed_lineage_commit_is_invisible(spark, smoke_dir,
+                                            tmp_path_factory):
+    """A lineage directory holding only a crashed commit's hidden tmp
+    file is no commit: the next run scans everything."""
+    docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
+    media_dir = os.path.join(smoke_dir, "media.parquet")
+    one = spark.read.parquet(os.path.join(media_dir,
+                                          sorted(os.listdir(media_dir))[0]))
+    out_dir = str(tmp_path_factory.mktemp("crashed_out"))
+    os.makedirs(os.path.join(out_dir, "lineage"))
+    with open(os.path.join(out_dir, "lineage", ".part-x.parquet.tmp"),
+              "wb") as f:
+        f.write(b"PAR1 torn")
+    assert committed_lineage(spark, out_dir) is None
+    res = run_resumable_extract(spark, docs, one, out_dir)
+    assert (res.scanned_files, res.skipped_files) == (1, 0)
+    assert committed_lineage(spark, out_dir).count() == 1
+
+
+def test_lineage_kernel_ships_templates_once(spark, tmp_path):
+    """With a session the kernel closes over the template broadcast
+    only; the template set itself (~150 KB) stays out of the pickled
+    task command."""
+    from pyspark import cloudpickle
+
+    from fin_ocr_sdk_spark.plans.lineage import make_lineage_kernel
+    kernel = make_lineage_kernel(str(tmp_path), "pickle", spark=spark)
+    assert len(cloudpickle.dumps(kernel)) < 10_000

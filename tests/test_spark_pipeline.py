@@ -340,3 +340,111 @@ def test_text_quality_rounds_like_duckdb(spark, tmp_path):
         assert not diff.any(), (c, got.loc[diff, c].head(),
                                 exp.loc[diff, c].head())
     assert (got["passes_quality"] == exp["passes_quality"]).all()
+
+
+def test_lang_id_rounds_like_duckdb(spark, tmp_path):
+    """q_lang_id's stopword ratio equals its DuckDB twin's, including
+    exact decimal halves the double sits just below (57/800 = 0.07125
+    must give 0.0712, as DuckDB rounds it), over a seeded sweep of
+    hit counts over token counts whose ratios land on 4-place halves."""
+    import duckdb
+    import numpy as np
+
+    import __spark_entry__ as m
+
+    rng = np.random.default_rng(11)
+    words = np.array(["check", "micr", "bank", "route", "memo", "payee"])
+    stops = np.array(m._STOPWORDS)
+
+    def doc(ntok, hits):
+        toks = np.where(np.arange(ntok) < hits, rng.choice(stops, ntok),
+                        rng.choice(words, ntok))
+        return " ".join(rng.permutation(toks))
+
+    # k/800, k/1600, k/3200 halves at 4 places, plus random ratios
+    cases = [(800, 57)] + [
+        (ntok, int(rng.integers(0, ntok + 1)))
+        for ntok in (int(rng.choice([800, 1600, 3200, 32, 160,
+                                     int(rng.integers(1, 400))]))
+                     for _ in range(600))]
+    texts = [doc(n, k) for n, k in cases]
+    pd.DataFrame({"doc_id": np.arange(len(texts), dtype="int64"),
+                  "text": texts}).to_parquet(tmp_path / "documents.parquet")
+    got = (m.q_lang_id(spark, str(tmp_path)).toPandas()
+           .sort_values("doc_id").reset_index(drop=True))
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{tmp_path / 'documents.parquet'}')")
+    exp = (con.execute(m.oracle_sql()["lang_id"]).fetchdf()
+           .sort_values("doc_id").reset_index(drop=True))
+    assert got.loc[0, "stopword_ratio"] == exp.loc[0, "stopword_ratio"] \
+        == 0.0712
+    for c in ("stopword_hits", "stopword_ratio", "pred_english"):
+        diff = got[c] != exp[c]
+        assert not diff.any(), (c, got.loc[diff, c].head(),
+                                exp.loc[diff, c].head())
+
+
+def _four_squares(r: int) -> list[int]:
+    """Non-negative integers whose squares sum to ``r`` (Lagrange)."""
+    import math
+    for x in range(math.isqrt(r), -1, -1):
+        for y in range(math.isqrt(r - x * x), -1, -1):
+            rem = r - x * x - y * y
+            for z in range(math.isqrt(rem), -1, -1):
+                w = math.isqrt(rem - z * z)
+                if z * z + w * w == rem:
+                    return [x, y, z, w]
+    raise AssertionError(r)
+
+
+def test_ann_cosine_topk_rounds_like_duckdb(spark, tmp_path):
+    """q_ann_cosine_topk's rounded cosine equals its DuckDB twin's on
+    similarities that are exact decimal halves at 4 places (a/800 and
+    a/1600 for integer vectors of norm 800 / 1600 against axis-vector
+    queries, e.g. 57/800 = 0.07125 must give 0.0712), over a seeded
+    sweep."""
+    import duckdb
+    import numpy as np
+
+    import __spark_entry__ as m
+
+    rng = np.random.default_rng(13)
+    for rnd in range(3):
+        # queries 0..7 are the axis vectors of dims 0..7; each has five
+        # neighbours with integer components on its own axis plus four
+        # filler dims, so every similarity is exactly a / norm
+        rows = [(q, [1.0 if d == q else 0.0 for d in range(12)])
+                for q in range(8)]
+        for q in range(8):
+            if (rnd, q) == (0, 0):
+                norm, picks = 800, [57, 69, 113, 139, 163]
+            else:
+                norm = int(rng.choice([800, 1600]))
+                picks = rng.choice(np.arange(1, norm, 2), 5, replace=False)
+            for a in picks:
+                vec = [0.0] * 12
+                vec[q] = float(a)
+                vec[8:] = map(float, _four_squares(norm * norm - int(a) ** 2))
+                rows.append((len(rows), vec))
+        d = tmp_path / f"r{rnd}"
+        d.mkdir()
+        pd.DataFrame({"vec_id": np.array([r[0] for r in rows], "int64"),
+                      "embedding": [np.array(r[1], np.float32)
+                                    for r in rows]}).to_parquet(
+            d / "embeddings.parquet")
+        key = ["query_id", "neighbor_id"]
+        got = (m.q_ann_cosine_topk(spark, str(d)).toPandas()
+               .sort_values(key).reset_index(drop=True))
+        con = duckdb.connect()
+        con.execute("CREATE VIEW embeddings AS SELECT * FROM read_parquet("
+                    f"'{d / 'embeddings.parquet'}')")
+        exp = (con.execute(m.oracle_sql()["ann_cosine_topk"]).fetchdf()
+               .sort_values(key).reset_index(drop=True))
+        assert len(got) == len(exp) == 40
+        assert (got[key] == exp[key]).all().all()
+        if rnd == 0:
+            assert got.loc[0, "cosine"] == exp.loc[0, "cosine"] == 0.0712
+        diff = got["cosine"] != exp["cosine"]
+        assert not diff.any(), (rnd, got.loc[diff].head(),
+                                exp.loc[diff].head())
